@@ -33,33 +33,33 @@ object DumpPlans {
     }
 
     val shingled = Dedup.shingleSets(docs, cfg)
-    dump("Stage 1-2: shingle + signatures (narrow, codegen'd, pruned scan)",
-      Dedup.signatures(shingled, cfg))
-    dump("Stage 3-4: LSH band table + candidate self-join",
-      Dedup.candidatePairs(Dedup.bandTable(Dedup.signatures(shingled, cfg), cfg)))
+    val sigs = Dedup.signatures(shingled, cfg)
+    dump("Stage 1-2: shingle + signatures (narrow, codegen'd, pruned scan)", sigs)
+    val bands = Dedup.bandTable(Dedup.validSignatures(sigs), cfg)
+    val cands = Dedup.candidatePairsSkewAware(bands)
+    dump("Stage 4: LSH candidate self-join over the checkpointed band table (no hot band measured: one plain self-join)",
+      cands)
     dump("Stage 5: exact-Jaccard verify join",
-      Dedup.pairs(docs, cfg))
+      Dedup.verifiedPairs(cands, shingled, cfg))
+    // the checkpointed pair table the serving queries read
+    val pairs = Dedup.pairsMaterialized(docs, cfg).withColumnRenamed("jaccard", "similarity")
     dump("Serving: counts-by-threshold over the edge table",
-      graft.queries.Serving.counts(docs,
-        Dedup.pairs(docs, cfg).withColumnRenamed("jaccard", "similarity")))
+      graft.queries.Serving.counts(docs, pairs))
     dump("ANN: brute-force cosine top-k (broadcast corpus side)", {
       val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
         .select(col("vec_id").as("id"), col("embedding"))
       graft.functions.Embeddings.bruteForceTopK(e, e, 5)
     })
     dump("Serving: list-by-match-count pagination (TakeOrderedAndProject, no global window)",
-      graft.queries.Serving.listByMatchCount(docs,
-        Dedup.pairs(docs, cfg).withColumnRenamed("jaccard", "similarity"), limit = 20))
-    dump("Production candidates: skew-aware hot/cold split (broadcast hot keys, salted hot branch)",
-      Dedup.candidatePairsSkewAware(
-        Dedup.bandTable(Dedup.validSignatures(Dedup.signatures(shingled, cfg)), cfg),
-        hotCap = 8, saltBuckets = 4, materialize = false))
+      graft.queries.Serving.listByMatchCount(docs, pairs, limit = 20))
+    dump("Stage 4, hot branch: measured hot/cold split (broadcast hot keys, salted hot branch; hotCap=1 makes every shared band hot)",
+      Dedup.candidatePairsSkewAware(bands, 1, 4))
     dump("Exact-threshold join: prefix-filtered candidates (freq agg -> per-doc window -> prefix self-join; no cartesian)",
       Dedup.prefixCandidates(shingled, cfg))
     dump("Dedup keep-list: quality-ranked canonical doc per cluster (two-phase partial argmax + flag-back join; no cluster-partitioned window)",
       // materialize=false: the eager scored-frame checkpoint collapses
       // the argmax + flag-back join shape to Scan ExistingRDD
-      Dedup.keepList(docs, Dedup.clusters(Dedup.pairs(docs, cfg)),
+      Dedup.keepList(docs, Dedup.clusters(pairs),
         graft.functions.TextFunctions.qualityScore(col("text")),
         materialize = false))
     dump("Multimodal: media -> frame features -> item embedding -> cosine pairs (binary column never shuffles)",
@@ -79,7 +79,7 @@ object DumpPlans {
       Dedup.containmentPairs(docs, cfg, tau = 0.6, materialize = false))
     dump("Exact-substring verify: one suffix array per hay doc; measured hot-hay split (bounded collect_list for cold hays, co-group-STREAMED needles for hot hays)",
       graft.pipeline.ExactSubstring.containmentPairs(
-        Dedup.pairs(docs, cfg).select("id_a", "id_b"), docs,
+        pairs.select("id_a", "id_b"), docs,
         materialize = false))
     dump("Curation: C4-style duplicate-span removal (one 8-byte-keyed occurrence+keeper aggregate; ordered per-doc reconstruction)",
       graft.queries.Curation.removeDuplicateSpans(

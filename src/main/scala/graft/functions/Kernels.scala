@@ -270,14 +270,22 @@ object Kernels {
     * grows geometrically and is reused for the life of the task thread.
     * Pure set membership on long keys — results are bit-identical.
     */
-  private final class LongProbe {
+  private[graft] final class LongProbe {
     private var keys = new Array[Long](1024)
     private var stamps = new Array[Int](1024)
     private var gen = 0
     private var mask = 1023
 
-    /** start a fresh set able to hold `n` keys at load factor <= 0.5 */
+    /** start a fresh set able to hold `n` keys at load factor <= 0.5;
+      * the capacity 2n must stay a positive Int power of two, so n is
+      * bounded by 2^29 (beyond it `n * 2` would overflow, the table
+      * would not grow, and add() would spin on a full table)
+      */
     def reset(n: Int): Unit = {
+      // explicit check, not require: this runs once per verified pair,
+      // and require's by-name message allocates a closure per call
+      if (n > (1 << 29))
+        throw new IllegalArgumentException(s"LongProbe holds at most 2^29 keys, got $n")
       var cap = keys.length
       while (cap < n * 2) cap <<= 1
       if (cap != keys.length) {

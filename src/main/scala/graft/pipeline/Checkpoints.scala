@@ -145,10 +145,12 @@ object ResumableDedupJob {
     docs.sparkSession.read.schema(sigSchema).parquet(sigDir)
   }
 
-  /** Pairs stage from a signatures table: validity filter -> skew-aware
-    * banded candidate join (hot bands measured and salted — the north
-    * rule's "explicit salted repartitioning for skewed hot bands" IS the
-    * production default, not an opt-in) -> exact verify.
+  /** Pairs stage from a signatures table — the ONE LSH pair wiring
+    * (also behind [[Dedup.pairsMaterialized]]): validity filter -> band
+    * table -> skew-aware candidate join (hot bands measured and salted
+    * only when one exists — the north rule's "explicit salted
+    * repartitioning for skewed hot bands" IS the production default,
+    * not an opt-in) -> exact verify.
     */
   def pairsStage(sigs: DataFrame, cfg: DedupConfig,
                  hotCap: Int = 1024, saltBuckets: Int = 16): DataFrame = {

@@ -65,21 +65,31 @@ class CorpusAndPipelineSpec extends SparkSpecBase {
     val (skewed, _) = SynthCorpus.generate(spark, seed = 7L, nBase = 300,
       dupRate = 0.1, skewBoilerplate = true)
     val docs = Dedup.fromPages(skewed)
-    val plain = Dedup.pairsMaterialized(docs, cfg, saltBuckets = 1)
-      .select("id_a", "id_b").collect().map(r => (r.getString(0), r.getString(1))).toSet
-    val salted = Dedup.pairsMaterialized(docs, cfg, saltBuckets = 8)
-      .select("id_a", "id_b").collect().map(r => (r.getString(0), r.getString(1))).toSet
-    assert(plain == salted)
-    // skew-aware selective salting: same pair set, replication only on
-    // measured hot bands (cap forced low so the shared boilerplate
-    // actually trips it on this fixture)
+    // skew-aware selective salting: same candidate set, replication only
+    // on measured hot bands (cap forced low: MinHash bands of this
+    // fixture are at most 6 docs wide, so only a cap of 2 trips it)
+    val (hotCap, saltBuckets) = (2, 4)
     val shingled = Dedup.shingleSets(docs, cfg)
-    val bands = Dedup.bandTable(Dedup.signatures(shingled, cfg), cfg)
-    val skewAware = Dedup.verifiedPairs(
-      Dedup.candidatePairsSkewAware(bands, hotCap = 8, saltBuckets = 4),
-      shingled, cfg)
+    val bands = Dedup.bandTable(Dedup.validSignatures(Dedup.signatures(shingled, cfg)), cfg)
+      .localCheckpoint(true)
+    assertSaltedMatchesPlain(bands, hotCap, saltBuckets)
+    // and the production entry (default cap: this fixture stays on the
+    // plain branch) verifies to the same pair set as the salted branch
+    val plain = Dedup.pairsMaterialized(docs, cfg)
       .select("id_a", "id_b").collect().map(r => (r.getString(0), r.getString(1))).toSet
-    assert(plain == skewAware)
+    val salted = Dedup.verifiedPairs(
+      Dedup.candidatePairsSkewAware(bands, hotCap, saltBuckets), shingled, cfg)
+      .select("id_a", "id_b").collect().map(r => (r.getString(0), r.getString(1))).toSet
+    assert(plain.nonEmpty && plain == salted)
+    // bucket bound: the salted left side of the widest hot band is
+    // split across salts, so no (band, salt) join bucket is as wide
+    val freq = bands.groupBy("band_key").agg(count(lit(1)).as("f"))
+    val widest = freq.agg(max(col("f"))).head.getLong(0)
+    val widestBucket = bands.join(freq.where(col("f") === widest), "band_key")
+      .groupBy(col("band_key"), pmod(xxhash64(col("id")), lit(saltBuckets)))
+      .count().agg(max(col("count"))).head.getLong(0)
+    assert(widestBucket < widest,
+      s"the widest hot band ($widest docs) still lands in one salted bucket")
   }
 
   test("containment pass flags truncation variants against their originals") {

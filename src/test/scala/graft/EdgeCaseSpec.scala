@@ -13,8 +13,8 @@ class EdgeCaseSpec extends SparkSpecBase {
     val spark2 = spark
     import spark2.implicits._
     val docs = Seq.empty[(Long, String)].toDF("id", "text")
-    assert(Dedup.pairs(docs, cfg).count() == 0)
-    assert(Dedup.clusters(Dedup.pairs(docs, cfg)).count() == 0)
+    assert(Dedup.pairsMaterialized(docs, cfg).count() == 0)
+    assert(Dedup.clusters(Dedup.pairsMaterialized(docs, cfg)).count() == 0)
     assert(Dedup.exactJaccardPairs(docs, cfg).count() == 0)
     assert(Dedup.exactJaccardPairsPrefix(docs, cfg).count() == 0)
   }
@@ -24,7 +24,7 @@ class EdgeCaseSpec extends SparkSpecBase {
     import spark2.implicits._
     val docs = Seq((1L, "one two three four five"), (2L, "ab"), (3L, "x y"))
       .toDF("id", "text")
-    assert(Dedup.pairs(docs, cfg).count() == 0)
+    assert(Dedup.pairsMaterialized(docs, cfg).count() == 0)
     // only the >=k-token doc shingles
     assert(Dedup.shingleSets(docs, cfg).count() == 1)
   }
@@ -37,7 +37,7 @@ class EdgeCaseSpec extends SparkSpecBase {
       (4L, "real text with enough tokens to shingle properly here"),
       (5L, "real text with enough tokens to shingle properly here"))
       .toDF("id", "text")
-    val pairs = Dedup.pairs(docs, cfg)
+    val pairs = Dedup.pairsMaterialized(docs, cfg)
     assert(pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
       Set((4L, 5L)))
     // exact dedup: null text hashes to null, grouped but harmless
@@ -54,20 +54,18 @@ class EdgeCaseSpec extends SparkSpecBase {
     val docs = (1 to n).map(i =>
       (i.toLong, "the same exact text repeated in every single document here"))
       .toDF("id", "text")
-    val pairs = Dedup.pairs(docs, cfg)
+    val pairs = Dedup.pairsMaterialized(docs, cfg)
     assert(pairs.count() == n.toLong * (n - 1) / 2) // complete clique
     assert(pairs.agg(min("jaccard")).head.getDouble(0) == 1.0)
     val clusters = Dedup.clusters(pairs)
     assert(clusters.select("cluster_id").distinct().count() == 1)
     assert(clusters.count() == n)
-    // skew-aware path agrees under a tiny hot cap (the whole corpus is
-    // one hot bucket per band)
-    val shingled = Dedup.shingleSets(docs, cfg)
-    val bands = Dedup.bandTable(Dedup.signatures(shingled, cfg), cfg)
-    val skew = Dedup.verifiedPairs(
-      Dedup.candidatePairsSkewAware(bands, hotCap = 10, saltBuckets = 4),
-      shingled, cfg)
-    assert(skew.count() == pairs.count())
+    // the salted branch agrees under a tiny hot cap (the whole corpus
+    // is one hot bucket per band)
+    val bands = Dedup.bandTable(Dedup.validSignatures(
+      Dedup.signatures(Dedup.shingleSets(docs, cfg), cfg)), cfg)
+    assert(assertSaltedMatchesPlain(bands, hotCap = 10, saltBuckets = 4).size ==
+      pairs.count())
   }
 
   test("incremental new-vs-all matching finds exactly the pairs touching the new batch") {
@@ -77,16 +75,32 @@ class EdgeCaseSpec extends SparkSpecBase {
       spark.read.parquet(s"$sfDir/documents.parquet"))
     val allSigs = Dedup.signatures(Dedup.shingleSets(docs, cfg), cfg)
       .localCheckpoint(true)
-    val fullPairs = Dedup.verifiedPairs(
-      Dedup.candidatePairs(Dedup.bandTable(allSigs, cfg)),
-      allSigs.select(col("id"), col("shingles")), cfg)
+    val fullPairs = graft.pipeline.ResumableDedupJob.pairsStage(allSigs, cfg)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // "new batch" = docs with even ids
-    val newSigs = allSigs.where(col("id") % 2 === 0)
-    val inc = Dedup.incrementalPairs(newSigs, allSigs, cfg)
+    // "new batch" = docs with even ids, matched against a persisted
+    // band store of the whole corpus
+    val bandStore = Dedup.bandTable(Dedup.validSignatures(allSigs), cfg)
+      .localCheckpoint(true)
+    val newIds = allSigs.where(col("id") % 2 === 0).select("id")
+    val inc = Dedup.incrementalPairsBanded(newIds, bandStore,
+        allSigs.select(col("id"), col("shingles")), cfg)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val want = fullPairs.filter { case (a, b) => a % 2 == 0 || b % 2 == 0 }
-    assert(inc == want)
+    assert(want.nonEmpty && inc == want)
+  }
+
+  // a failing first job must release every block the operator persisted
+  // (the injected error fires on the first evaluation of `text`)
+  private def failingDocs = spark.range(1, 40).select(col("id"),
+    when(col("id") % 7 === 3, raise_error(lit("injected failure")))
+      .otherwise(lit("one two three four five six")).cast("string").as("text"))
+
+  test("containmentPairs: a failing first job releases every cache it persisted") {
+    assertFailureReleasesCaches(Dedup.containmentPairs(failingDocs, cfg, tau = 0.6))
+  }
+
+  test("pairsMaterialized: a failing first job releases every cache it persisted") {
+    assertFailureReleasesCaches(Dedup.pairsMaterialized(failingDocs, cfg))
   }
 
   test("streaming tumbling-window agg equals the batch windowedCounts") {

@@ -26,6 +26,17 @@ class FunctionsSpec extends SparkSpecBase {
   private def forAll2[A, B](ga: Gen[A], gb: Gen[B])(f: (A, B) => Unit): Unit =
     samples(ga).zip(samples(gb, seed0 = 90042L)).foreach { case (a, b) => f(a, b) }
 
+  test("LongProbe.reset rejects key counts whose capacity would overflow Int") {
+    val p = new Kernels.LongProbe
+    // above 2^29 keys the 2n capacity no longer fits an Int power of two
+    intercept[IllegalArgumentException](p.reset((1 << 29) + 1))
+    intercept[IllegalArgumentException](p.reset(Int.MaxValue))
+    // a rejected reset leaves the probe usable
+    p.reset(3000)
+    (1L to 3000L).foreach(p.add)
+    assert((1L to 3000L).forall(p.contains) && !p.contains(0L) && !p.contains(3001L))
+  }
+
   test("shingle kernel == builtin array_distinct(transform(.., xxhash64)) bit-for-bit") {
     val spark2 = spark
     import spark2.implicits._

@@ -32,11 +32,12 @@ class PlanSpec extends SparkSpecBase {
     val (pages, _) = graft.corpus.SynthCorpus.generate(spark, 1L, 50)
     val dir = java.nio.file.Files.createTempDirectory("graft-pages").toString
     pages.write.mode("overwrite").parquet(dir)
-    val plan = planOf(
-      Dedup.pairs(Dedup.fromPages(spark.read.parquet(dir)), cfg))
-    "ReadSchema: struct<(.*?)>".r.findAllMatchIn(plan).foreach { m =>
-      assert(!m.group(1).contains("html"),
-        s"html:binary must be pruned from dedup scans: ${m.group(1)}")
+    val plan = planOf(Dedup.signatures(
+      Dedup.shingleSets(Dedup.fromPages(spark.read.parquet(dir)), cfg), cfg))
+    val schemas = "ReadSchema: struct<(.*?)>".r.findAllMatchIn(plan).map(_.group(1)).toList
+    assert(schemas.nonEmpty, s"no parquet scan in the plan:\n$plan")
+    schemas.foreach { s =>
+      assert(!s.contains("html"), s"html:binary must be pruned from dedup scans: $s")
     }
   }
 
@@ -50,10 +51,36 @@ class PlanSpec extends SparkSpecBase {
       s"expected ts pushdown, plan:\n${plan.take(1500)}")
   }
 
+  private def shingled = Dedup.shingleSets(docs, cfg)
+  private def bands = Dedup.bandTable(
+    Dedup.validSignatures(Dedup.signatures(shingled, cfg)), cfg)
+
   test("LSH candidate path contains no cartesian/nested-loop join") {
-    val plan = planOf(Dedup.pairs(docs, cfg))
-    assert(!plan.contains("CartesianProduct"), "cartesian in LSH path")
-    assert(!plan.contains("BroadcastNestedLoopJoin"), "BNLJ in LSH path")
+    // both operator branches: plain (no cap) and salted (every shared
+    // band hot)
+    for ((hotCap, branch) <- Seq(Int.MaxValue -> "plain", 1 -> "salted")) {
+      val plan = planOf(Dedup.verifiedPairs(
+        Dedup.candidatePairsSkewAware(bands, hotCap, 4), shingled, cfg))
+      assert(!plan.contains("CartesianProduct"), s"cartesian in $branch LSH path")
+      assert(!plan.contains("BroadcastNestedLoopJoin"), s"BNLJ in $branch LSH path")
+    }
+  }
+
+  test("all-cold band table: the candidate operator is one plain self-join (no Union, no hot-key broadcast)") {
+    // size-based broadcasts off, so the only BroadcastExchange a plan
+    // can carry is the explicitly hinted hot-key set
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      val b = bands.localCheckpoint(true)
+      val cold = planOf(Dedup.candidatePairsSkewAware(b, Int.MaxValue, 4))
+      assert(!cold.contains("Union") && !cold.contains("BroadcastExchange"),
+        s"all-cold candidates still plan the hot/cold split:\n$cold")
+      // the gate discriminates: a measured hot band plans the split
+      val hot = planOf(Dedup.candidatePairsSkewAware(b, 1, 4))
+      assert(hot.contains("Union") && hot.contains("BroadcastExchange"),
+        s"hot band did not take the salted split:\n$hot")
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
   test("whole-stage codegen covers the signature projection (custom exprs codegen)") {
@@ -77,7 +104,7 @@ class PlanSpec extends SparkSpecBase {
   test("small dimension join broadcasts (flagged-set anti-join, J3 shape)") {
     val flagged = spark.read.parquet(s"$sfDir/documents.parquet")
       .where(col("n_chars") < 250).select(col("doc_id").as("id_a"))
-    val pairs = Dedup.pairs(docs, cfg)
+    val pairs = Dedup.pairsMaterialized(docs, cfg)
     val plan = planOf(pairs.join(flagged, Seq("id_a"), "left_anti"))
     assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastExchange"),
       s"expected broadcast for small flagged set:\n${plan.take(1200)}")

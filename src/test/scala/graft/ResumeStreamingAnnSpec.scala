@@ -213,7 +213,7 @@ class ResumeStreamingAnnSpec extends SparkSpecBase {
     val streamed = IncrementalIngest.pairs(spark, workDir, cfg)
       .select("id_a", "id_b").collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
-    val batch = Dedup.pairs(Dedup.fromPages(pages), cfg)
+    val batch = Dedup.pairsMaterialized(Dedup.fromPages(pages), cfg)
       .select("id_a", "id_b").collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
     assert(streamed == batch)
@@ -278,7 +278,7 @@ class ResumeStreamingAnnSpec extends SparkSpecBase {
     val streamed = IncrementalIngest.pairs(spark, workDir, cfg)
       .select("id_a", "id_b").collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
-    val batch = Dedup.pairs(Dedup.fromPages(pages), cfg)
+    val batch = Dedup.pairsMaterialized(Dedup.fromPages(pages), cfg)
       .select("id_a", "id_b").collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
     assert(streamed == batch, "mixed-cadence pairs diverge from batch pipeline")
@@ -345,7 +345,7 @@ class ResumeStreamingAnnSpec extends SparkSpecBase {
     val streamed = IncrementalIngest.pairs(spark, workDir, cfg)
       .select("id_a", "id_b").collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
-    val batch = Dedup.pairs(Dedup.fromPages(pages), cfg)
+    val batch = Dedup.pairsMaterialized(Dedup.fromPages(pages), cfg)
       .select("id_a", "id_b").collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
     assert(streamed == batch, "continuous-trigger pairs diverge from batch pipeline")
@@ -386,7 +386,7 @@ class ResumeStreamingAnnSpec extends SparkSpecBase {
       .map(r => (r.getString(0), r.getString(1))).toSet
     assert(pairsAfter == pairsBefore, "retry changed the pair store")
     // and the retried batch equals the batch pipeline over all rows
-    val batchPairs = Dedup.pairs(Dedup.fromPages(pages), cfg)
+    val batchPairs = Dedup.pairsMaterialized(Dedup.fromPages(pages), cfg)
       .select("id_a", "id_b").collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
     assert(pairsAfter == batchPairs)

@@ -41,10 +41,10 @@ class Round2Spec extends SparkSpecBase {
     val valid = Dedup.validSignatures(all)
     assert(valid.count() == 2 && valid.where(col("id") === 99L).count() == 0)
     // and the banding path never sees the degenerate row: the wired
-    // pipeline (pairs) still finds exactly the real pair
+    // pipeline (pairsMaterialized) still finds exactly the real pair
     val bands = Dedup.bandTable(valid, cfg)
     assert(bands.where(col("id") === 99L).count() == 0)
-    val p = Dedup.pairs(Seq((1L, "a b c d e"), (2L, "a b c d e"), (3L, "q r"))
+    val p = Dedup.pairsMaterialized(Seq((1L, "a b c d e"), (2L, "a b c d e"), (3L, "q r"))
       .toDF("id", "text"), cfg)
     assert(p.collect().map(r => (r.getLong(0), r.getLong(1))).toSet == Set((1L, 2L)))
   }
@@ -53,19 +53,19 @@ class Round2Spec extends SparkSpecBase {
     val (skewed, _) = SynthCorpus.generate(spark, seed = 7L, nBase = 300,
       dupRate = 0.1, skewBoilerplate = true)
     val docs = Dedup.fromPages(skewed).localCheckpoint(true)
-    val expected = Dedup.clusters(Dedup.pairs(docs, cfg))
+    val expected = Dedup.clusters(Dedup.pairsMaterialized(docs, cfg))
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
     val workDir = java.nio.file.Files.createTempDirectory("graft-skewrun").toString
-    // tiny hotCap so the shared-boilerplate bands actually take the
-    // salted branch (fixture bands reach width ~90)
+    // tiny hotCap so the widest bands actually take the salted branch
+    // (MinHash bands of this fixture are at most 6 docs wide)
     val got = ResumableDedupJob.run(docs, cfg, workDir, buckets = 4,
-        hotCap = 8, saltBuckets = 4)
+        hotCap = 2, saltBuckets = 4)
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
     assert(got == expected)
     // identical pair set out of the skew-aware pairs stage
     val sigs = spark.read.parquet(s"$workDir/signatures/tag=${cfg.configTag}-b4")
-    val stage = ResumableDedupJob.pairsStage(sigs, cfg, hotCap = 8, saltBuckets = 4)
-    val plainPairs = Dedup.pairs(docs, cfg)
+    val stage = ResumableDedupJob.pairsStage(sigs, cfg, hotCap = 2, saltBuckets = 4)
+    val plainPairs = Dedup.pairsMaterialized(docs, cfg)
       .select("id_a", "id_b").collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
     assert(stage.select("id_a", "id_b").collect()

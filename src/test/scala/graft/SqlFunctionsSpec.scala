@@ -70,7 +70,7 @@ class SqlFunctionsSpec extends SparkSpecBase {
     assert(widened == exact)
   }
 
-  test("full LSH pair query expressible in pure SQL matches Dedup.pairs") {
+  test("full LSH pair query expressible in pure SQL matches Dedup.pairsMaterialized") {
     GraftFunctions.registerAll(spark)
     val cfg = DedupConfig()
     val docs = Dedup.fromDocuments(
@@ -92,7 +92,7 @@ class SqlFunctionsSpec extends SparkSpecBase {
          |WHERE jaccard_sets(x.shingles, y.shingles) >= ${cfg.threshold}
          |""".stripMargin)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val apiPairs = Dedup.pairs(docs, cfg)
+    val apiPairs = Dedup.pairsMaterialized(docs, cfg)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(sqlPairs == apiPairs)
   }
