@@ -67,16 +67,8 @@ object CurationJob {
     // the curated table then carries the REWRITTEN text
     val spanTokens = args.lift(4).map(_.toInt).getOrElse(0)
 
-    val builder = SparkSession.builder()
-      .appName("graft-curation")
-      .config("spark.sql.session.timeZone", "UTC")
-    if (!sys.props.contains("spark.master"))
-      builder.master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    try println(run(spark, docsPath, workDir, benchPath, heldoutNumerator,
-      spanTokens))
-    finally spark.stop()
+    JobSession.run("graft-curation")(spark =>
+      println(run(spark, docsPath, workDir, benchPath, heldoutNumerator, spanTokens)))
   }
 
   /** The funnel itself (session-agnostic — tests drive it directly);

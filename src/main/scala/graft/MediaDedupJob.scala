@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import graft.functions.Embeddings
 import graft.multimodal.BinaryPipeline
@@ -67,27 +67,20 @@ object MediaDedupJob {
     val threshold = args.lift(2).map(_.toDouble).getOrElse(0.995)
     val mode = args.lift(3).getOrElse("exact")
 
-    val builder = SparkSession.builder()
-      .appName("graft-media-dedup")
-      .config("spark.sql.session.timeZone", "UTC")
-    if (!sys.props.contains("spark.master"))
-      builder.master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val t0 = System.currentTimeMillis()
-    val media = spark.read.parquet(mediaPath)
-    val keep = run(media, workDir, threshold, mode)
-    val nItems = media.count()
-    val nKept = keep.where(col("kept")).count()
-    val tag = configTag(threshold, mode, defaultStride, defaultDim)
-    val nClusters = spark.read.parquet(s"$workDir/clusters/tag=$tag")
-      .select("cluster_id").distinct().count()
-    val wall = (System.currentTimeMillis() - t0) / 1000.0
-    println(
-      s"""{"job":"graft-media-dedup","config_tag":"$tag","items":$nItems,""" +
-        s""""clusters":$nClusters,"kept":$nKept,"mode":"$mode",""" +
-        s""""wall_sec":$wall,"items_per_sec":${nItems / wall}}""")
-    spark.stop()
+    JobSession.run("graft-media-dedup") { spark =>
+      val t0 = System.currentTimeMillis()
+      val media = spark.read.parquet(mediaPath)
+      val keep = run(media, workDir, threshold, mode)
+      val nItems = media.count()
+      val nKept = keep.where(col("kept")).count()
+      val tag = configTag(threshold, mode, defaultStride, defaultDim)
+      val nClusters = spark.read.parquet(s"$workDir/clusters/tag=$tag")
+        .select("cluster_id").distinct().count()
+      val wall = (System.currentTimeMillis() - t0) / 1000.0
+      println(
+        s"""{"job":"graft-media-dedup","config_tag":"$tag","items":$nItems,""" +
+          s""""clusters":$nClusters,"kept":$nKept,"mode":"$mode",""" +
+          s""""wall_sec":$wall,"items_per_sec":${nItems / wall}}""")
+    }
   }
 }

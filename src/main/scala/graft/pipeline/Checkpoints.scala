@@ -50,12 +50,20 @@ final class CheckpointStore(spark: SparkSession, path: String) {
       .coalesce(1)): Unit
   }
 
-  /** Stage-level metrics view (lineage: per-bucket rows + timings). */
-  def metrics(): DataFrame =
-    read().groupBy("stage", "config_tag")
+  /** Stage-level metrics view (lineage: per-bucket rows + timings).
+    * `wall_ms` is the stage wall: every bucket row of one commit repeats
+    * that wave's wall, so it is counted once per commit (`ts`).
+    */
+  def metrics(): DataFrame = {
+    val rows = read()
+    val wall = rows.groupBy("stage", "config_tag", "ts").agg(max(col("wall_ms")).as("w"))
+      .groupBy("stage", "config_tag").agg(sum(col("w")).as("wall_ms"))
+    rows.groupBy("stage", "config_tag")
       .agg(countDistinct(col("bucket")).as("buckets"),
         sum(col("rows")).as("rows"),
         max(col("ts")).as("last_ts"))
+      .join(wall, Seq("stage", "config_tag"))
+  }
 }
 
 /** Resumable dedup job: signatures stage is computed bucket-by-bucket

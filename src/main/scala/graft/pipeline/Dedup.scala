@@ -308,11 +308,11 @@ object Dedup {
     * prefix bound robust to that boundary (extra candidates are
     * removed by the exact verify, so the pair set is unchanged).
     */
-  private def prefixTable(ranked: DataFrame, tau: Double): DataFrame =
+  private[graft] def prefixTable(ranked: DataFrame, tau: Double): DataFrame =
     ranked.where(col("rn") <= col("c") - ceil(col("c") * tau) + 2)
       .select("id", "h", "c", "rn")
 
-  private def pairCandidatesFromPrefix(prefix: DataFrame, tau: Double): DataFrame =
+  private[graft] def pairCandidatesFromPrefix(prefix: DataFrame, tau: Double): DataFrame =
     prefix.as("a").join(prefix.as("b"),
         col("a.h") === col("b.h") && col("a.id") < col("b.id") &&
           // length pruning with the same one-unit boundary slack
@@ -329,14 +329,6 @@ object Dedup {
             greatest(col("a.c"), col("b.c")) * tau - 1)
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .distinct()
-
-  /** Prefix-filtered candidate pairs (see [[exactJaccardPairsPrefix]]).
-    * Exposed for the pruning-evidence test comparing candidate volume
-    * against the complete inverted-index join.
-    */
-  private[graft] def prefixCandidates(shingled: DataFrame, cfg: DedupConfig): DataFrame =
-    pairCandidatesFromPrefix(
-      prefixTable(rankedIndex(shingled), cfg.threshold), cfg.threshold)
 
   /** Fuzzy set-containment pairs: |A∩B| / min(|A|,|B|) >= tau over the
     * word-k-gram shingle sets — the edit-robust complement of the exact
@@ -367,17 +359,10 @@ object Dedup {
     * bucket. Cold keys pay nothing; the pair set is unchanged
     * (equality-tested on the boilerplate skew fixture).
     */
-  def containmentPairs(docs: DataFrame, cfg: DedupConfig,
-                       tau: Double, materialize: Boolean = true,
+  def containmentPairs(docs: DataFrame, cfg: DedupConfig, tau: Double,
                        hotCap: Int = 1024, saltBuckets: Int = 16): DataFrame = {
-    // materialize=false returns the LAZY plan (no persist/checkpoint) —
-    // for plan inspection (DumpPlans): localCheckpoint collapses the
-    // lineage to Scan ExistingRDD, hiding the join shape
-    val shingled0 = shingleSets(kernelParallel(docs), cfg)
-    val shingled =
-      if (materialize)
-        shingled0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else shingled0
+    val shingled = shingleSets(kernelParallel(docs), cfg)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // ONE ranked inverted index (id, c, h, df, rn) feeds every slice
       // below. The round-5 shape re-derived the exploded table per
@@ -385,12 +370,9 @@ object Dedup {
       // semi/anti joins against the hot-key set; df riding each row
       // makes that membership a plain filter and the prefix bound a
       // plain filter — no extra joins, no broadcasts (guide §2.4).
-      // Persisted (when eager) because four join legs consume it.
-      val ranked0 = rankedIndex(shingled)
-      val ranked =
-        if (materialize)
-          ranked0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        else ranked0
+      // Persisted because four join legs consume it.
+      val ranked = rankedIndex(shingled)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
         // populate the cache EAGERLY (inside the try: a failing pass
         // must still release the cache): the join legs below run as
@@ -399,14 +381,11 @@ object Dedup {
         // store is compute-then-publish, not compute-once) — measured
         // 2x slower than a single eager pass at sf0.1. The same pass
         // returns max(df), deciding up front whether a hot branch is
-        // needed at all (the ExactSubstring.hotHays pattern); the lazy
-        // plan keeps both branches so plan dumps show the full shape.
-        val maxDf =
-          if (!materialize) Long.MaxValue
-          else {
-            val r = ranked.agg(count(lit(1)).as("n"), max(col("df")).as("m")).head
-            if (r.isNullAt(1)) 0L else r.getLong(1)
-          }
+        // needed at all (the ExactSubstring.hotHays pattern).
+        val maxDf = {
+          val r = ranked.agg(count(lit(1)).as("n"), max(col("df")).as("m")).head
+          if (r.isNullAt(1)) 0L else r.getLong(1)
+        }
         // +2 not +1: the verify predicate is the DOUBLE quotient i/|A| >=
         // tau, which can round up across tau while ceil(c*tau) = i+1 in
         // exact arithmetic — one element of slack keeps the window
@@ -449,7 +428,7 @@ object Dedup {
         }).distinct()
         val sa = shingled.select(col("id").as("small_id"), col("shingles").as("sh_a"))
         val sb = shingled.select(col("id").as("big_id"), col("shingles").as("sh_b"))
-        val result = cands.join(sa, "small_id").join(sb, "big_id")
+        cands.join(sa, "small_id").join(sb, "big_id")
           .withColumn("containment",
             graft.functions.Expressions.intersectCount(col("sh_a"), col("sh_b"))
               .cast("double") / size(col("sh_a")))
@@ -457,9 +436,9 @@ object Dedup {
           .select(least(col("small_id"), col("big_id")).as("id_a"),
             greatest(col("small_id"), col("big_id")).as("id_b"),
             col("containment"))
-        if (materialize) result.localCheckpoint(true) else result
-      } finally { if (materialize) { ranked.unpersist(); () } }
-    } finally { if (materialize) { shingled.unpersist(); () } }
+          .localCheckpoint(true)
+      } finally ranked.unpersist()
+    } finally shingled.unpersist()
   }
 
   /** Pairs -> cluster assignments via distributed connected components
@@ -500,18 +479,16 @@ object Dedup {
     * @param clusters (id, cluster_id) from [[clusters]]
     * @param quality  scoring column evaluated over `docs` (numeric)
     */
-  def keepList(docs: DataFrame, clusters: DataFrame, quality: Column,
-               materialize: Boolean = true): DataFrame = {
+  def keepList(docs: DataFrame, clusters: DataFrame, quality: Column): DataFrame = {
     // the scored frame feeds TWO consumers (the winner aggregate and the
     // flag-back join): left lazy, the docs scan + quality expression +
     // cluster join execute once per consumer — for an expensive quality
     // (text scoring, media decode via mediaKeepList) that doubles the
-    // dominant cost. Materialized narrow (id, quality, cluster_id) rows
-    // only; materialize=false keeps the lazy plan for plan dumps.
-    val scored0 = docs.select(col("id"), quality.as("quality"))
+    // dominant cost. Materialized: narrow (id, quality, cluster_id) rows.
+    val scored = docs.select(col("id"), quality.as("quality"))
       .join(clusters.select(col("id"), col("cluster_id")), Seq("id"), "left")
       .withColumn("cluster_id", coalesce(col("cluster_id"), col("id")))
-    val scored = if (materialize) scored0.localCheckpoint(true) else scored0
+      .localCheckpoint(true)
     // min over (-quality, id) == (max quality, ties by min id): the
     // exact ordering the old window used, as one partial-aggregatable
     // struct-min; null quality -> +Inf so it sorts LAST like the

@@ -157,24 +157,20 @@ object ExactSubstring {
     * Per-hay candidate counts come from the ids-only oriented pair set
     * (one cheap aggregation); the hot-hay id set is tiny by
     * construction (≤ |pairs| / hotCap) and broadcast to split both
-    * sides without a shuffle. With `materialize` (the default) the
-    * hot set is EVALUATED up front: when no hay is hot — the normal
-    * case — the single-consumer cold plan is returned directly, so the
-    * benign path pays exactly one extra ids-only aggregation over the
-    * round-3 shape, none of the two-branch machinery.
-    * `materialize=false` keeps the fully lazy two-branch plan (plan
-    * dumps; callers embedding this in a larger lazy pipeline).
+    * sides without a shuffle. The hot set is EVALUATED up front: when
+    * no hay is hot — the normal case — the single-consumer cold plan is
+    * returned directly, so the benign path pays exactly one extra
+    * ids-only aggregation over the round-3 shape, none of the
+    * two-branch machinery.
     */
   def containmentPairs(candidates: DataFrame, docs: DataFrame,
-                       hotCap: Int = 128,
-                       materialize: Boolean = true): DataFrame = {
+                       hotCap: Int = 128): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     // 1. orientation from a LENGTH-only projection — full texts never
     //    join the candidate table row-per-pair. MATERIALIZED (ids only,
     //    tiny): it feeds the hot-count agg AND both branch splits —
     //    lazy, the orientation joins would re-execute once per consumer.
-    //    materialize=false keeps the fully lazy plan for plan dumps.
     val lens = docs.select(col("id").cast("string").as("id"),
       length(col("text")).as("len"))
     val withLen = candidates
@@ -182,13 +178,13 @@ object ExactSubstring {
         col("id_b").cast("string").as("id_b"))
       .join(lens.select(col("id").as("id_a"), col("len").as("len_a")), "id_a")
       .join(lens.select(col("id").as("id_b"), col("len").as("len_b")), "id_b")
-    val oriented0 = withLen.select(
+    val oriented = withLen.select(
       when(col("len_a") >= col("len_b"), col("id_a")).otherwise(col("id_b"))
         .as("hay_id"),
       when(col("len_a") >= col("len_b"), col("id_b")).otherwise(col("id_a"))
         .as("needle_id"),
       col("id_a"), col("id_b"))
-    val oriented = if (materialize) oriented0.localCheckpoint(true) else oriented0
+      .localCheckpoint(true)
     // 2. needle text attaches per pair (each needle ships once per pair,
     //    bounded); the hay text never rides the pair rows
     val needleTexts = docs.select(col("id").cast("string").as("needle_id"),
@@ -197,12 +193,12 @@ object ExactSubstring {
       orientedSide.join(needleTexts, "needle_id")
         .select(col("hay_id"), col("id_a"), col("id_b"), col("needle_text"))
     // 3. measured hot split: ids-only count per hay, hot set broadcast.
-    //    Checkpointed when eager: it feeds the isEmpty probe plus three
-    //    broadcast consumers (anti/semi/semi) — lazy, the aggregation
-    //    would re-run once per consumer.
-    val hotHays0 = oriented.groupBy("hay_id").agg(count(lit(1)).as("n"))
+    //    Checkpointed: it feeds the isEmpty probe plus three broadcast
+    //    consumers (anti/semi/semi) — lazy, the aggregation would re-run
+    //    once per consumer.
+    val hotHays = oriented.groupBy("hay_id").agg(count(lit(1)).as("n"))
       .where(col("n") > hotCap).select("hay_id")
-    val hotHays = if (materialize) hotHays0.localCheckpoint(true) else hotHays0
+      .localCheckpoint(true)
     val hayTexts = docs.select(col("id").cast("string").as("hay_id"),
       col("text").as("hay_text"))
     // 4a. cold hays (bounded groups): collect_list + one join per group
@@ -220,15 +216,14 @@ object ExactSubstring {
           (ia, ib, containedIn(hay, sa, Option(needle0).getOrElse("")))
         }
       }.toDF("id_a", "id_b", "contained")
-    if (materialize && hotHays.isEmpty) {
+    if (hotHays.isEmpty) {
       // no hot hay anywhere (the normal case): single-consumer cold
       // plan, no split joins, no second branch — round-3 shape + one
       // ids-only aggregation
       return coldPath(pairRowsOf(oriented))
     }
-    // 4b. hot hays exist (or the caller wants the lazy full plan):
-    // split on the broadcast hot set; hot needles stream through a
-    // cogroup — nothing materializes per group
+    // 4b. hot hays exist: split on the broadcast hot set; hot needles
+    // stream through a cogroup — nothing materializes per group
     val coldOut = coldPath(
       pairRowsOf(oriented.join(broadcast(hotHays), Seq("hay_id"), "left_anti")))
     val hotPairs = pairRowsOf(

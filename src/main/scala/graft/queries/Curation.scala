@@ -278,18 +278,15 @@ object Curation {
     */
   def semanticDedup(emb: DataFrame, threshold: Double,
                     quality: org.apache.spark.sql.Column = lit(0.0),
-                    bits: Int = 12, tables: Int = 4,
-                    materialize: Boolean = true): DataFrame = {
+                    bits: Int = 12, tables: Int = 4): DataFrame = {
     val pairs = graft.functions.Embeddings
       .srpThresholdPairs(emb, threshold, bits, tables)
     val clusters = graft.pipeline.Dedup.clusters(pairs)
     // only the id is canonicalized — the frame keeps ALL its columns so
     // a `quality` expression over any of them (score, length, …) still
-    // resolves; keepList projects what it needs. materialize forwards
-    // to keepList's scored-frame checkpoint (false = lazy plan dumps).
+    // resolves; keepList projects what it needs.
     graft.pipeline.Dedup.keepList(
-      emb.withColumn("id", col("id").cast("string")),
-      clusters, quality, materialize)
+      emb.withColumn("id", col("id").cast("string")), clusters, quality)
       .select(col("id"), col("cluster_id"), col("quality"), col("kept"))
   }
 }

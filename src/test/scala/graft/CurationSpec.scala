@@ -203,6 +203,10 @@ class CurationSpec extends SparkSpecBase {
     assert(once.forall(_ != null))
   }
 
+  // the salted hot branch's replication: the constant salt sequence is
+  // folded into an array literal, so match the Generate by its output
+  private val saltExplode = "Generate explode\\(.*\\[salt#".r
+
   test("containmentPairs finds an embedded quote that jaccard misses; matches inverted-index oracle") {
     val spark2 = spark
     import spark2.implicits._
@@ -224,7 +228,12 @@ class CurationSpec extends SparkSpecBase {
     // full-corpus parity vs the complete inverted-index formulation
     val sf = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id").as("id"), col("text"))
-    val prefixSet = Dedup.containmentPairs(sf, cfg, tau = 0.6).collect()
+    val (prefixRows, plans) = executedPlans(Dedup.containmentPairs(sf, cfg, tau = 0.6).collect())
+    // max df at sf0.001 is at most 500 docs < hotCap 1024: the measured
+    // short-circuit runs the one cold join, no salted branch
+    assert(plans.nonEmpty && !plans.exists(p => p.contains("Union") || saltExplode.findFirstIn(p).isDefined),
+      s"salted hot branch executed on an all-cold corpus:\n${plans.mkString("\n")}")
+    val prefixSet = prefixRows
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val sh = Dedup.shingleSets(sf, cfg)
       .select(col("id"), col("shingles"))
@@ -319,8 +328,13 @@ class CurationSpec extends SparkSpecBase {
         .map(r => (r.getString(0), r.getString(1))).toSet
     val hotCap = 8
     val saltBuckets = 4
-    val salted = ps(Dedup.containmentPairs(docs, cfg, tau = 0.6,
+    val (saltedDf, plans) = executedPlans(Dedup.containmentPairs(docs, cfg, tau = 0.6,
       hotCap = hotCap, saltBuckets = saltBuckets))
+    // the measured max df exceeds the cap: the executed jobs take the
+    // cold/salted-hot union with the salt replication
+    assert(plans.exists(p => p.contains("Union") && saltExplode.findFirstIn(p).isDefined),
+      s"no executed salted hot branch:\n${plans.mkString("\n")}")
+    val salted = ps(saltedDf)
     val unsalted = ps(Dedup.containmentPairs(docs, cfg, tau = 0.6,
       hotCap = Int.MaxValue))
     assert(salted == unsalted,

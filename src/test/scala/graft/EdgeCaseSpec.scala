@@ -103,6 +103,10 @@ class EdgeCaseSpec extends SparkSpecBase {
     assertFailureReleasesCaches(Dedup.pairsMaterialized(failingDocs, cfg))
   }
 
+  test("exactJaccardPairsPrefix: a failing first job releases every cache it persisted") {
+    assertFailureReleasesCaches(Dedup.exactJaccardPairsPrefix(failingDocs, cfg))
+  }
+
   test("streaming tumbling-window agg equals the batch windowedCounts") {
     val spark2 = spark
     import spark2.implicits._

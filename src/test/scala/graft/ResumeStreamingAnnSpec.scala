@@ -133,6 +133,24 @@ class ResumeStreamingAnnSpec extends SparkSpecBase {
     assert(new graft.store.TxLog(s"$waveDir/checkpoints").history().size == buckets)
   }
 
+  test("checkpoint metrics report the stage wall once per commit, not once per bucket row") {
+    val docs = Dedup.fromDocuments(
+      spark.read.parquet(s"$sfDir/documents.parquet")).limit(60)
+    val dir = tmpDir("graft-wall")
+    ResumableDedupJob.signaturesStage(docs, cfg, dir, buckets = 4, waveBuckets = 2)
+    val store = new CheckpointStore(spark, dir)
+    // two commits of two bucket rows each; a commit's rows repeat its wall
+    val commits = store.read().collect()
+      .groupBy(_.getAs[Long]("ts")).values.map(_.map(_.getAs[Long]("wall_ms")).toSet).toSeq
+    assert(commits.size == 2 && commits.forall(_.size == 1), s"commits: $commits")
+    val stageWall = commits.map(_.head).sum
+    assert(stageWall > 0)
+    val m = store.metrics().where(col("stage") === "signatures").collect()
+    assert(m.length == 1 && m.head.getAs[Long]("buckets") == 4)
+    assert(m.head.getAs[Long]("wall_ms") == stageWall,
+      s"metrics wall ${m.head.getAs[Long]("wall_ms")} != per-commit sum $stageWall")
+  }
+
   test("signatures stage is total on an empty corpus and resume does not wedge") {
     val docs = Dedup.fromDocuments(
       spark.read.parquet(s"$sfDir/documents.parquet")).where(lit(false))

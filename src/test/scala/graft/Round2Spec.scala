@@ -423,26 +423,24 @@ class Round2Spec extends SparkSpecBase {
     }
     val docs = (Seq((0L, hay)) ++ needles).toDF("id", "text")
     val cands = (1 to 10000).map(i => (0L, i.toLong)).toDF("id_a", "id_b")
-    val result = ExactSubstring.containmentPairs(cands, docs)
-    // plan-shape gate on the LAZY form (materialize=true checkpoints,
-    // collapsing the plan): the hot branch is co-grouped/streamed; the
-    // only collect_list left is the anti-joined cold branch, whose
-    // groups are bounded by hotCap — and here the one hay is hot, so
-    // the cold branch is empty
-    val plan = ExactSubstring.containmentPairs(cands, docs, materialize = false)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("CoGroup"), s"expected CoGroup in plan:\n$plan")
-    val got = result.collect()
+    // plan-shape gate on the jobs the call executes: the one hay is
+    // measured hot, so its needles are co-grouped/streamed; the only
+    // collect_list left is the anti-joined cold branch, whose groups
+    // are bounded by hotCap (empty here)
+    val (result, plans) = executedPlans(ExactSubstring.containmentPairs(cands, docs).collect())
+    assert(plans.exists(_.contains("CoGroup")), s"expected CoGroup in an executed plan:\n${plans.mkString("\n")}")
+    val got = result
       .map(r => (r.getString(1).toLong, r.getBoolean(2))).toMap
     assert(got.size == 10000)
     needles.foreach { case (id, text) =>
       assert(got(id) == hay.contains(text), s"needle $id")
     }
     // hot/cold path equality: an all-cold run (cap above the group
-    // size) produces the identical result set
-    val allCold = ExactSubstring.containmentPairs(cands, docs, hotCap = 20000)
-      .collect().map(r => (r.getString(1).toLong, r.getBoolean(2))).toMap
-    assert(allCold == got)
+    // size) produces the identical result set and runs no co-group
+    val (allCold, coldPlans) = executedPlans(
+      ExactSubstring.containmentPairs(cands, docs, hotCap = 20000).collect())
+    assert(!coldPlans.exists(_.contains("CoGroup")), s"all-cold run executed a CoGroup:\n${coldPlans.mkString("\n")}")
+    assert(allCold.map(r => (r.getString(1).toLong, r.getBoolean(2))).toMap == got)
   }
 
   test("prefix-filtered exact Jaccard: identical pair set, fewer candidates on boilerplate skew") {
@@ -468,7 +466,9 @@ class Round2Spec extends SparkSpecBase {
     val fullCands = sh.as("a").join(sh.as("b"),
         col("a.h") === col("b.h") && col("a.id") < col("b.id"))
       .select(col("a.id"), col("b.id")).distinct().count()
-    val prefCands = Dedup.prefixCandidates(shingled, cfg).count()
+    // the candidate wiring of exactJaccardPairsPrefix
+    val prefCands = Dedup.pairCandidatesFromPrefix(
+      Dedup.prefixTable(Dedup.rankedIndex(shingled), cfg.threshold), cfg.threshold).count()
     assert(prefCands < fullCands,
       s"prefix filter should prune: $prefCands vs $fullCands")
     assert(prefCands <= fullCands / 2,

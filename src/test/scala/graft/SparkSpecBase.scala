@@ -39,6 +39,16 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
     plain
   }
 
+  /** Runs `body` and returns its result with the executed plan of every
+    * SQL job it ran — the capture PLANS.md is written with
+    * ([[DumpPlans.executedJobs]]), so a plan gate sees the branch the
+    * operator measured and took, not a lazy plan no job runs.
+    */
+  def executedPlans[T](body: => T): (T, Seq[String]) = {
+    val (result, jobs) = DumpPlans.executedJobs(spark)(body)
+    (result, jobs.map(_._2.executedPlan.toString))
+  }
+
   /** Runs `body`, which must throw, and asserts the failure path left no
     * cache behind: no Dataset cache entry (a `persist` whose first job
     * failed registers the entry before any RDD exists) and no persisted
